@@ -61,8 +61,9 @@ def stage_and_swap_write(
     """Write parquet to a staging dir, then swap into place.
 
     All-or-nothing like the reference's single-transaction refresh:
-    the data is fully written before the live path changes, and a
-    failure during the swap restores the previous table from backup.
+    the data is fully written before the live path changes, a failed
+    write removes its staging dir, and a failure during the swap
+    restores the previous table from backup.
 
     LOCAL-FS ONLY: the swap uses POSIX ``os.rename``. On HDFS/S3 the
     transactional analog is a metastore pointer swap or a table format
@@ -74,7 +75,13 @@ def stage_and_swap_write(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
+    try:
+        writer.parquet(staging)
+    except BaseException:
+        # A failed job can leave the staging dir behind; the live
+        # table was never touched.
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
     backup = final_path.rstrip("/") + ".old"
     if os.path.exists(backup):
         shutil.rmtree(backup)

@@ -15,6 +15,7 @@ from filmdb_data_warehouse___power_bi_dashboard_spark.plans.etl import build_war
 from filmdb_data_warehouse___power_bi_dashboard_spark.sources.sinks import (
     merge_upsert,
     read_warehouse_table,
+    stage_and_swap_write,
 )
 
 
@@ -25,8 +26,32 @@ def dw_root():
     shutil.rmtree(d, ignore_errors=True)
 
 
+_WAREHOUSE_TABLES = [
+    "dim_date",
+    "dim_client",
+    "dim_magasin",
+    "dim_categorie",
+    "dim_film",
+    "fact_paiement",
+    "v_agg_mensuel_magasin",
+    "v_agg_mensuel_categorie",
+    "v_dim_mois",
+]
+
+
+def _assert_counts_match_disk(spark, dw_root, counts):
+    """The counts build_warehouse observes on its writes must be the
+    row counts of the tables actually on disk."""
+    on_disk = {
+        name: read_warehouse_table(spark, dw_root, name).count()
+        for name in _WAREHOUSE_TABLES
+    }
+    assert counts == on_disk
+
+
 def test_build_warehouse_idempotent(spark, sf_small, dw_root):
     counts1 = build_warehouse(spark, sf_small, dw_root)
+    _assert_counts_match_disk(spark, dw_root, counts1)
     keys1 = {
         name: sorted(
             r[0]
@@ -41,6 +66,7 @@ def test_build_warehouse_idempotent(spark, sf_small, dw_root):
         ]
     }
     counts2 = build_warehouse(spark, sf_small, dw_root)
+    _assert_counts_match_disk(spark, dw_root, counts2)
     assert counts1 == counts2
     for name, key in [
         ("dim_client", "client_key"),
@@ -80,6 +106,24 @@ def test_merge_upsert_do_nothing(spark):
         for r in merge_upsert(existing, incoming, "k", do_update=False).collect()
     }
     assert out == {1: "old", 2: "ins"}
+
+
+def test_stage_and_swap_write_failure_leaves_no_staging(spark, tmp_path):
+    """A write that fails mid-job must re-raise, remove its staging
+    dir and leave the live table as it was."""
+    from pyspark.sql import functions as F
+
+    live = str(tmp_path / "t")
+    rows = [(1, "a"), (2, "b")]
+    stage_and_swap_write(spark.createDataFrame(rows, "k int, v string"), live)
+    failing = spark.createDataFrame([(3, "c")], "k int, v string").withColumn(
+        "v",
+        F.when(F.col("k") > 0, F.raise_error(F.lit("boom"))).otherwise(F.col("v")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        stage_and_swap_write(failing, live)
+    assert not [p for p in os.listdir(tmp_path) if p.startswith(".staging-")]
+    assert sorted(map(tuple, spark.read.parquet(live).collect())) == rows
 
 
 def test_fact_surrogates_stable_under_cache_release(spark, sf_small):
